@@ -730,10 +730,12 @@ object Chunker {
     val mask = commentMask(lines, language)
     var i = 0
     while (i < lines.length) {
+      val goGroupKw =
+        if (language == "go" && !mask(i))
+          goGroupRe.findFirstMatchIn(lines(i)).map(_.group(1))
+        else None
       if (mask(i)) { i += 1 }
-      else if (language == "go" &&
-          goGroupRe.findFirstMatchIn(lines(i)).isDefined) {
-        val goGroupKw = goGroupRe.findFirstMatchIn(lines(i)).get.group(1)
+      else if (goGroupKw.isDefined) {
         // go parenthesized const/var/type groups (`const (` … `)`):
         // ONE chunk per spec — the go.chunks.scm per-spec behavior
         // (const/var closed the r11 residual; type groups close the
@@ -747,7 +749,7 @@ object Chunker {
         // keyword comes from the already-matched group (not a re-parse:
         // takeWhile(_ != ' ') diverged from the regex's \s* on tabs,
         // mislabeling `const\t(` groups as type specs)
-        val gkw = goGroupKw match {
+        val gkw = goGroupKw.get match {
           case "const" => "constant"
           case "var" => "variable"
           case _ => "type"

@@ -173,21 +173,6 @@ object BatchRetrieval {
     */
   val KeySep: String = 0.toChar.toString
 
-  /** QUERY-TIME code-only profile view (named code units; markdown
-    * sections rank by different rules in the doc-search path). The
-    * SERVED index is FULL-profile — the reference's chunks_fts indexes
-    * every chunk and type/language restriction is a query-time WHERE
-    * (schema.sql:149-156, scoring/filter.rs) — so this filter is a
-    * view a CALLER applies to its own chunk frame, never an index-time
-    * restriction (r12 verdict wrong #1: building hp_* through this
-    * filter silently dropped the sql/markdown/constant gold categories
-    * from any artifact-served deployment).
-    */
-  def codeChunkFilter(chunks: DataFrame): DataFrame =
-    chunks.filter(
-      col("chunk_type").isin("function", "class", "constructor", "test") &&
-        col("language") =!= "markdown")
-
   /** The keyed projection every hot-path stage shares. */
   def docsOf(chunks: DataFrame): DataFrame =
     chunks.select(

@@ -278,22 +278,16 @@ object FileWalk {
     else Nil
   }
 
-  /** Enumerate source files under `root`, name-ordered DFS. */
+  /** Enumerate source files under `root`, name-ordered DFS. A root that
+    * does not exist or is not a directory is an error, not an empty tree.
+    */
   def walk(root: String, opts: Options): Seq[WalkedFile] = {
     val rootPath = Paths.get(root)
+    require(Files.isDirectory(rootPath), s"walk root is not a directory: $root")
     val out = mutable.ArrayBuffer[WalkedFile]()
     val extsLc = opts.extensions.map(_.toLowerCase).toSet
     visit(rootPath, "", 0, infoExcludeLayer(rootPath, opts), opts, extsLc, out)
     out.toSeq
-  }
-
-  /** The walk as a DataFrame(path, size) — the natural handoff to
-    * `spark.read.format("binaryFile")` / `spark.read.text` over the
-    * yielded path list.
-    */
-  def walkDF(spark: SparkSession, root: String, opts: Options): DataFrame = {
-    import spark.implicits._
-    walk(root, opts).toDF("path", "size")
   }
 
   /** Extension → Chunker pack name for the ingest handoff (the walk's

@@ -174,4 +174,15 @@ class FileWalkSpec extends SparkTestBase {
     // throws: one bad .gitignore line must not crash the walk
     assert(FileWalk.compilePattern("[z-a]*").isEmpty)
   }
+
+  test("a missing or non-directory root fails loudly, naming the root") {
+    val root = mkTree()
+    try {
+      Seq(root.resolve("no_such_dir"), root.resolve("keep.log")).foreach { bad =>
+        val e = intercept[IllegalArgumentException](FileWalk.walk(bad.toString, opts))
+        assert(e.getMessage.contains(bad.toString))
+        intercept[IllegalArgumentException](FileWalk.readFiles(spark, bad.toString, opts))
+      }
+    } finally rmTree(root)
+  }
 }

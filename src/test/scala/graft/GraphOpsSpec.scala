@@ -102,6 +102,99 @@ class GraphOpsSpec extends SparkTestBase {
     assert(capped.agg(max("depth")).head.getInt(0) == 1)
   }
 
+  /** Seeded random digraph on nodes 0..23: a 6-cycle, random edges
+    * (self-loops and repeated rows included), and hub 0 with wide
+    * fan-out and fan-in.
+    */
+  private def randomGraph(seed: Long): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    def node() = rnd.nextInt(24).toLong
+    (1L to 6L).map(i => (i, i % 6 + 1)) ++
+      Seq.fill(10)((0L, node())) ++ Seq.fill(6)((node(), 0L)) ++
+      Seq.fill(30)((node(), node()))
+  }
+
+  /** Plain-Scala BFS: minimum hop depth from any seed. */
+  private def refDepths(edges: Seq[(Long, Long)], seeds: Set[Long],
+                        maxDepth: Int): Map[Long, Int] = {
+    val out = edges.groupMap(_._1)(_._2)
+    var seen = seeds.map(_ -> 0).toMap
+    var frontier = seeds
+    for (d <- 1 to maxDepth) {
+      frontier = frontier.flatMap(out.getOrElse(_, Nil)).filterNot(seen.contains)
+      seen ++= frontier.map(_ -> d)
+    }
+    seen
+  }
+
+  /** The lexicographically smallest of ALL shortest paths to each
+    * reached node, by enumerating them.
+    */
+  private def refPaths(edges: Seq[(Long, Long)], seeds: Set[Long],
+                       maxDepth: Int): Map[Long, String] = {
+    val depth = refDepths(edges, seeds, maxDepth)
+    val into = edges.distinct.groupMap(_._2)(_._1)
+    def all(v: Long): Seq[String] =
+      if (depth(v) == 0) Seq(v.toString)
+      else into(v).filter(u => depth.get(u).contains(depth(v) - 1))
+        .flatMap(all).map(p => s"$p->$v")
+    depth.keys.map(v => v -> all(v).min).toMap
+  }
+
+  test("BFS kernel: bfs, bfsReverse, bfsLabeled and bfsPaths match a " +
+    "plain-Scala reference on random cyclic hub graphs, on every rail") {
+    type DF = org.apache.spark.sql.DataFrame
+    def nd(df: DF) = df.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+    def ndp(df: DF) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq.sorted
+    def snd(df: DF) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
+    for (g <- Seq(11L, 12L); maxDepth <- Seq(3, 5)) {
+      val edges = randomGraph(g)
+      val seeds = Set(1L, 9L + g)
+      val edf = edges.toDF("src", "dst")
+      val sdf = seeds.toSeq.toDF("node")
+      val ldf = seeds.toSeq.map(s => (s, s)).toDF("seed", "node")
+      val fwd = refDepths(edges, seeds, maxDepth).toSeq.sorted
+      val bwd = refDepths(edges.map(_.swap), seeds, maxDepth).toSeq.sorted
+      val lab = seeds.toSeq.flatMap(s =>
+        refDepths(edges, Set(s), maxDepth).map { case (n, d) => (s, n, d) }).sorted
+      val paths = refPaths(edges, seeds, maxDepth)
+      // rails: the default cap (the reachability bound fits, so the
+      // per-level counts are skipped), a tight cap equal to the closure
+      // size (no level is cut, but the bound exceeds it, so each level
+      // is counted), and uncapped (lazy at depth 3, counted at 5)
+      val n0 = seeds.size
+      assert(n0 + edges.size > fwd.size.max(bwd.size) &&
+        n0 * (1 + edges.size) > lab.size)
+      def rails(tight: Int) = Seq(GraphOps.DefaultMaxNodes, tight.toLong, Long.MaxValue)
+      def at(cap: Long) = s"graph $g, depth $maxDepth, cap $cap"
+      for (cap <- rails(fwd.size)) {
+        assert(nd(GraphOps.bfs(edf, sdf, maxDepth, cap)) == fwd, s"bfs, ${at(cap)}")
+        assert(ndp(GraphOps.bfsPaths(edf, sdf, maxDepth, cap)) ==
+          fwd.map { case (n, d) => (n, d, paths(n)) }, s"bfsPaths, ${at(cap)}")
+      }
+      for (cap <- rails(bwd.size))
+        assert(nd(GraphOps.bfsReverse(edf, sdf, maxDepth, cap)) == bwd,
+          s"bfsReverse, ${at(cap)}")
+      for (cap <- rails(lab.size))
+        assert(snd(GraphOps.bfsLabeled(edf, ldf, maxDepth, cap)) == lab,
+          s"bfsLabeled, ${at(cap)}")
+    }
+  }
+
+  test("bfsPaths: the node cap stops a deep walk on a hub graph") {
+    // seed fans out to 200 nodes that all funnel into hub 500, which
+    // fans out again: level 1 exceeds the cap, so the walk stops there
+    val hub = ((2L to 201L).map(i => (1L, i)) ++
+      (2L to 201L).map(i => (i, 500L)) ++
+      (502L to 600L).map(i => (500L, i))).toDF("src", "dst")
+    val capped = GraphOps.bfsPaths(hub, Seq(1L).toDF("node"), maxDepth = 5,
+      maxNodes = 10L)
+    assert(capped.count() == 201)
+    assert(capped.agg(max("depth")).head.getInt(0) == 1)
+  }
+
   test("pageRank: exact micro-unit values on a symmetric star, deterministic") {
     import spark.implicits._
     // symmetric star 1 <-> {2,3,4}: outdeg(1)=3, outdeg(leaf)=1

@@ -4,14 +4,14 @@ import java.nio.file.{Files, Paths}
 
 import graft.sources.Indexes
 
-/** Dev tool (r14 optimization round): dump `.explain("formatted")` for
-  * registry queries to plans/<tag>/<qname>_<suffix>.txt — the judge's
-  * plan-claim evidence files. Mirrors the bench's serving setup
-  * (prebuilt index root active, artifacts pinned) so the captured plan
-  * is the one the bench actually executes, not the derived-mode plan
-  * the correctness gate runs.
+/** Dev tool: dump `.explain("formatted")` for registry queries to
+  * plans/<tag>/<qname>_<suffix>.txt — plan evidence for an optimization
+  * claim. Mirrors the bench's serving setup (prebuilt index root
+  * active) so the captured plan is the one the bench actually executes,
+  * not the derived-mode plan the correctness gate runs.
   *
-  * Usage: sbt "Test/runMain graft.PlanDumpMain <suffix> <substr> [substr ...]"
+  * Usage: sbt "Test/runMain graft.PlanDumpMain <tag> <suffix> <substr> [substr ...]"
+  *   tag     — output directory under plans/, e.g. "r16"
   *   suffix  — file suffix, e.g. "before" / "after"
   *   substr  — query-name substrings to select (e.g. q205 q110)
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1); the index
@@ -19,16 +19,17 @@ import graft.sources.Indexes
   */
 object PlanDumpMain {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: PlanDumpMain <suffix> <substr...>")
-    val suffix = args.head
-    val subs = args.tail.toSeq
+    require(args.length >= 3, "usage: PlanDumpMain <tag> <suffix> <substr...>")
+    val tag = args(0)
+    val suffix = args(1)
+    val subs = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val ixDir = sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR",
       s"/tmp/graft_index_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}")
     val spark = SparkTestBase.session
     require(new java.io.File(ixDir).exists, s"index root missing: $ixDir")
     Indexes.setRoot(Some(ixDir))
-    val outDir = Paths.get("plans", "r14")
+    val outDir = Paths.get("plans", tag)
     Files.createDirectories(outDir)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => subs.exists(n.contains))
